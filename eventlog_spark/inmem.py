@@ -93,10 +93,11 @@ class InMemEventLog(EventLog):
         # slice); collect() here is the engine's storage, not a data path
         collected = [tuple(r) for r in out.collect()]
         if post_write_check is not None:
-            # streamed ingest: the collect above ran the write job, so
-            # the observed validity tally is available; a raise here
-            # keeps the rows out of the engine (all-or-nothing)
-            post_write_check()
+            # the collect above ran the write job, so the observed
+            # validity tally is available; each row is its own staged
+            # range; a raise here keeps the rows out of the engine
+            # (all-or-nothing)
+            post_write_check([(r[0], r[0], 1) for r in collected])
         self._rows.extend(collected)
 
     def _read_raw(self) -> DataFrame | None:

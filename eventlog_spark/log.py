@@ -111,6 +111,48 @@ def _version_group_stats(md) -> list[tuple[int, int]] | None:
     return out if out else None
 
 
+# Row-group size of minor-compaction folds. Row groups are the read unit
+# of ``scan_rows``: a page decodes only the groups overlapping it, so a
+# group of 4 × the 1000-event max page keeps a page at 1-2 groups.
+FOLD_ROW_GROUP_ROWS = 4096
+
+_ROW_COLUMNS = ("version", "version_prev", "timestamp", "label", "payload", "checksum")
+
+
+def _table_rows(tbl) -> list[tuple]:
+    """An event table as (version, version_prev, timestamp, label,
+    payload, checksum) tuples — the ``_rows_in_range`` row shape."""
+    return list(zip(*[tbl.column(c).to_pylist() for c in _ROW_COLUMNS]))
+
+
+def _check_staged_ranges(
+    ranges: list[tuple[int, int, int] | None], base: int, total: int
+) -> None:
+    """Refuse a bulk commit unless its staged files' (lo, hi, rows)
+    tile base+1..base+total exactly: sorted by lo, each range starting
+    right after the previous one and holding hi-lo+1 rows, none
+    missing (None: a non-empty staged file without version stats). The
+    count pass and the write are separate jobs, so a nondeterministic
+    upstream can stage a gap, an overlap or a different row count than
+    the head about to be published."""
+    if None in ranges:
+        raise InvalidVersion("bulk commit staged a fragment without version stats")
+    expect = base + 1
+    for rlo, rhi, rows in sorted(ranges):
+        if rlo != expect or rhi - rlo + 1 != rows:
+            raise InvalidVersion(
+                f"bulk commit staged {rows} rows at versions {rlo}..{rhi}, "
+                f"expected a dense range from {expect} "
+                f"(batch {base + 1}..{base + total})"
+            )
+        expect = rhi + 1
+    if expect != base + total + 1:
+        raise InvalidVersion(
+            f"bulk commit staged versions {base + 1}..{expect - 1}, "
+            f"expected {base + 1}..{base + total}"
+        )
+
+
 def checksum_expr() -> Column:
     """O19: integrity checksum over the same fields the reference hashes
     (timestamp ‖ label ‖ payload ‖ version_prev; checksum.go:9-67)."""
@@ -1675,31 +1717,41 @@ class EventLog:
         version stats the commit-intent record is refreshed with the
         exact names BEFORE anything becomes visible, closing the
         bulk-crash window that used to pay a full directory listing on
-        the next open."""
+        the next open.
+
+        ``post_write_check(ranges)`` gets the (lo, hi, rows) version
+        range and row count of every non-empty staged file (None where
+        a footer has no version stats) before anything is renamed; a
+        raise there discards the staging dir, so no file of the commit
+        becomes visible."""
+        import pyarrow.parquet as pq
+
         tmp = self.path + f".bulk.{uuid.uuid4().hex}"
         try:
             out.write.mode("overwrite").parquet(tmp)
-            if post_write_check is not None:
-                # streamed ingest (round 13): the validity tally rode
-                # the write job as an observe metric — a raise here
-                # discards the private staging dir before ANY file
-                # becomes visible, preserving all-or-nothing semantics
-                post_write_check()
             tag = uuid.uuid4().hex[:8]
             staged: list[tuple[str, str, dict]] = []
+            ranges: list[tuple[int, int, int] | None] = []
             for f in sorted(os.listdir(tmp)):
                 if f.startswith(("_", ".")) or not f.endswith(".parquet"):
                     continue
                 name = f"part-{tag}-{f}"
                 src = os.path.join(tmp, f)
                 entry: dict = {"n": name}
-                rng = self._parquet_version_range(src)
-                if rng is not None:
-                    entry["lo"], entry["hi"] = rng
-                lrng = self._parquet_label_range(src)
+                md = pq.read_metadata(src)  # one footer read per file
+                stats = _version_group_stats(md) if md.num_rows else None
+                if stats is not None:
+                    entry["lo"] = min(s[0] for s in stats)
+                    entry["hi"] = max(s[1] for s in stats)
+                    ranges.append((entry["lo"], entry["hi"], md.num_rows))
+                elif md.num_rows:
+                    ranges.append(None)
+                lrng = _label_group_range(md)
                 if lrng is not None:
                     entry["lmin"], entry["lmax"] = lrng
                 staged.append((src, name, entry))
+            if post_write_check is not None:
+                post_write_check(ranges)
             if staged and all("hi" in e for _, _, e in staged):
                 self._write_intent(
                     [name for _, name, _ in staged],
@@ -1843,7 +1895,6 @@ class EventLog:
                 return None  # replayed batch: already committed, skip
             base = self._latest
             ts = max(int(time.time()), self._last_ts)
-            post_write_check = None
             if valid_expr is not None:
                 # ROUND 13 — ordered error-mode bulk ingest, SINGLE
                 # materialization (guide §1.2/§5; design block in
@@ -1857,15 +1908,6 @@ class EventLog:
                 )
                 versioned, total = batch.df, batch.total
                 unpersist = lambda: None  # noqa: E731 - no cache to release
-
-                def post_write_check() -> None:
-                    if batch.invalid_observed():
-                        from .errors import InvalidPayload
-
-                        raise InvalidPayload(
-                            "append_dataframe: batch contains invalid events"
-                        )
-
             else:
                 # Persisted flow (arrival order, and drop-mode ordered
                 # appends): one materialization serves everything — the
@@ -1883,6 +1925,21 @@ class EventLog:
                     valid_col="_valid" if on_invalid != "drop" else None,
                 )
                 versioned, total, unpersist = batch.df, batch.total, batch.unpersist
+
+            def post_write_check(ranges) -> None:
+                # runs after the staged write, before ANY staged file is
+                # renamed into the log (all-or-nothing): the streamed
+                # flow's validity tally rode the write job as an observe
+                # metric, and the staged footers must tile exactly the
+                # versions the count pass promised
+                if valid_expr is not None and batch.invalid_observed():
+                    from .errors import InvalidPayload
+
+                    raise InvalidPayload(
+                        "append_dataframe: batch contains invalid events"
+                    )
+                _check_staged_ranges(ranges, base, total)
+
             try:
                 if valid_expr is None and on_invalid != "drop":
                     if batch.invalid:
@@ -1915,16 +1972,15 @@ class EventLog:
             finally:
                 unpersist()
             # Head is known exactly from the versioning count pass — no
-            # re-scan of the log to publish state. Caveat (documented
-            # trade): the count pass and the write must see the same
-            # rows — the persisted flow trusts its cache, the streamed
-            # flow trusts source determinism (fixed bucket literals +
-            # a stable source; both jobs recompute the same scan). On a
-            # cluster, a NONdeterministic upstream could diverge
-            # between the two jobs; callers with such sources should
-            # checkpoint upstream or verify post-write (max(version) ==
-            # head). The reference's analog is its mid-batch rollback
-            # (file.go:343-360).
+            # re-scan of the log to publish state. The count pass and
+            # the write must see the same rows — the persisted flow
+            # trusts its cache, the streamed flow trusts source
+            # determinism (fixed bucket literals + a stable source; both
+            # jobs recompute the same scan). A NONdeterministic upstream
+            # that diverges between the two jobs is refused before
+            # publish by post_write_check's staged-range check (gap,
+            # overlap or wrong count vs base+total). The reference's
+            # analog is its mid-batch rollback (file.go:343-360).
             prev_initial, prev_last_ts = self._initial, self._last_ts
             prev_marker = (
                 self._stream_commits.get(txn[0], None) if txn is not None else None
@@ -2076,12 +2132,13 @@ class EventLog:
         sequential read (read_event.go:37), and at 100 TB a serving
         layer reads only the fragments containing the page, never the
         log. Dense versions make that exact here: the page is a closed
-        version interval [lo, hi], fragment version ranges come from
-        parquet FOOTER STATS (metadata-only read, cached per immutable
-        file), and only overlapping fragments are read — pyarrow,
-        in-process, no job. Cost: one ≤1 KB manifest read + O(#frags)
-        cached stat lookups + the page's fragment reads; latency is
-        ms where the Spark path is seconds.
+        version interval [lo, hi]; the manifest's version ranges pick
+        the overlapping fragments and parquet row-group stats (footer,
+        cached per immutable file) pick the overlapping row groups, and
+        only those are decoded — pyarrow, in-process, no job (see
+        ``_rows_in_range``). Cost: one ≤1 KB manifest read + the
+        overlapping entries' cached stat lookups + 1-2 row groups per
+        big fragment; latency is ms where the Spark path is seconds.
 
         Falls back to ``scan(...).collect()`` (the manifest-snapshot
         Spark path) if the pyarrow read cannot prove completeness —
@@ -2140,23 +2197,36 @@ class EventLog:
         """Storage seam for ``scan_rows``: every committed event with
         lo <= version <= hi, as (version, version_prev, timestamp,
         label, payload, checksum) tuples in any order — or None if the
-        engine cannot serve the range driver-side. File engine: parquet
-        footer stats select the overlapping manifest fragments (range
-        cache keyed by (name, mtime, size) — fragments are immutable
-        once published, truncation rewrites change the key), pyarrow
-        reads just those. With ``label``, the manifest's per-column
-        label stats additionally drop fragments that cannot hold the
-        label (bounds + bloom — the same data skipping scan(label=...)
-        applies) and rows are filtered exactly.
+        engine cannot serve the range driver-side. File engine: the
+        manifest's version ranges (footer stats for unranged entries)
+        select the overlapping fragments; the range cache is keyed by
+        (name, mtime, size) — fragments are immutable once published,
+        truncation rewrites change the key. With ``label``, the
+        manifest's per-column label stats additionally drop fragments
+        that cannot hold the label (bounds + bloom — the same data
+        skipping scan(label=...) applies).
 
-        With ``label`` AND ``limit``, fragments are read in version
-        order (``reverse`` flips it) and the read STOPS once no unread
-        fragment can displace the first ``limit`` matches — so a
-        paginated label tail costs O(fragments holding one page), not
-        O(all remaining matches to the head) per page (the r8 shape:
-        filter the full interval, then slice). May return more than
-        ``limit`` matching rows; the caller slices after sorting."""
+        Each selected fragment is read one of two ways. A fragment of
+        ≤1024 rows (the uncompacted tail) is read whole into the
+        hot-tail row cache and filtered in Python. Every other fragment
+        has ONE read path: its row groups are pruned by their cached
+        version stats, only the overlapping groups are decoded, and
+        ``lo ≤ version ≤ hi`` (and ``label ==``) is filtered Arrow-side
+        before the Python conversion — so a 1000-event page over a
+        minor fold (FOLD_ROW_GROUP_ROWS-row groups) decodes 1-2 groups.
+        A file written as one big row group (a fold from before the
+        row-group bound) goes through the same path and just decodes
+        more.
+
+        With ``label`` AND ``limit``, fragments — and, inside a
+        fragment, row groups — are read in version order (``reverse``
+        flips it) and the read STOPS once nothing unread can displace
+        the first ``limit`` matches, so a paginated label tail costs
+        O(row groups holding one page), not O(all remaining matches to
+        the head) per page. May return more than ``limit`` matching
+        rows; the caller slices after sorting."""
         try:
+            import pyarrow.compute as pc
             import pyarrow.parquet as pq
         except ImportError:  # pragma: no cover - pyarrow ships in Spark
             return None
@@ -2211,34 +2281,44 @@ class EventLog:
                     for e in cand
                     if _entry_may_contain_label(e, label, positions)
                 ]
-        if label is not None:
-            if limit is not None:
-                # bounded label page: entries without a recorded range
-                # (legacy adoption) must always be read, so they go
-                # first; ranged entries follow in version order so the
-                # early-stop bar below is sound
-                unranged = [e for e in cand if e.get("lo") is None]
-                ranged = sorted(
-                    (e for e in cand if e.get("lo") is not None),
-                    key=(lambda e: -e["hi"]) if reverse else (lambda e: e["lo"]),
-                )
-                cand = unranged + ranged
         early_stop = label is not None and limit is not None
+        if early_stop:
+            # bounded label page: entries without a recorded range
+            # (legacy adoption) must always be read, so they go first;
+            # ranged entries follow in version order so the early-stop
+            # bar below is sound
+            unranged = [e for e in cand if e.get("lo") is None]
+            ranged = sorted(
+                (e for e in cand if e.get("lo") is not None),
+                key=(lambda e: -e["hi"]) if reverse else (lambda e: e["lo"]),
+            )
+            cand = unranged + ranged
         out: list[tuple] = []
+
+        def page_full_before(vlo: int, vhi: int) -> bool:
+            # a bounded label page is full once its limit-th best match
+            # outranks every version in [vlo, vhi] — the fragment or
+            # row group about to be read, and by the read order every
+            # later one
+            if not early_stop or len(out) < limit:
+                return False
+            if reverse:
+                return vhi < heapq.nlargest(limit, (r[0] for r in out))[-1]
+            return vlo > heapq.nsmallest(limit, (r[0] for r in out))[-1]
+
+        def remember(key, rng) -> None:
+            with self._lock:
+                cache[key] = rng
+                if len(cache) > 4096:  # bound: evict arbitrary half
+                    for k in list(cache)[:2048]:
+                        cache.pop(k, None)
+
         try:
             for entry in cand:
-                if early_stop and len(out) >= limit and entry.get("lo") is not None:
-                    # the page is full once the limit-th best match
-                    # outranks everything this (and every later, by the
-                    # sort) fragment could hold
-                    if reverse:
-                        bar = heapq.nlargest(limit, (r[0] for r in out))[-1]
-                        if entry["hi"] < bar:
-                            break
-                    else:
-                        bar = heapq.nsmallest(limit, (r[0] for r in out))[-1]
-                        if entry["lo"] > bar:
-                            break
+                if entry.get("lo") is not None and page_full_before(
+                    entry["lo"], entry["hi"]
+                ):
+                    break
                 fname = entry["n"]
                 if not fname.endswith(".parquet"):
                     continue
@@ -2250,28 +2330,15 @@ class EventLog:
                 pf = None  # opened at most ONCE per fragment per page
                 if rng is None and entry.get("lo") is not None:
                     # manifest range is authoritative for the file-level
-                    # prune; per-group stats load lazily if the read
-                    # path needs them
+                    # prune; per-group stats load when the file is read
                     rng = (entry["lo"], entry["hi"], None)
                 if rng is None:
                     pf = pq.ParquetFile(full)
                     stats = _version_group_stats(pf.metadata)
                     if stats is None:
                         return None  # stats unavailable: let Spark serve it
-                    # cache the per-group stats too (only when there IS
-                    # more than one group — single-group files never
-                    # need them), so repeated pages over a big compacted
-                    # fragment don't re-walk its footer every time
-                    rng = (
-                        min(s[0] for s in stats),
-                        max(s[1] for s in stats),
-                        stats if len(stats) > 1 else None,
-                    )
-                    with self._lock:
-                        cache[key] = rng
-                        if len(cache) > 4096:  # bound: evict arbitrary half
-                            for k in list(cache)[:2048]:
-                                cache.pop(k, None)
+                    rng = (min(s[0] for s in stats), max(s[1] for s in stats), stats)
+                    remember(key, rng)
                 if rng[1] < lo or rng[0] > hi:
                     continue
                 with self._lock:
@@ -2280,60 +2347,14 @@ class EventLog:
                     if pf is None:
                         pf = pq.ParquetFile(full)
                     md = pf.metadata
-                    n_rows = md.num_rows
-                    if n_rows > 16384 and (rng[0] < lo or rng[1] > hi):
-                        # big fragment, partial overlap: read ONLY the
-                        # row groups whose version stats overlap the
-                        # page (compact() writes 8 MiB row groups for
-                        # exactly this pruning unit); a direct
-                        # read_row_groups beats the dataset-filter
-                        # machinery ~2-4x
-                        stats = rng[2] if len(rng) > 2 else None
-                        if stats is None:
-                            stats = _version_group_stats(md)
-                            if stats is not None:
-                                # manifest-seeded range had no per-group
-                                # stats: cache them for the next page
-                                with self._lock:
-                                    cache[key] = (rng[0], rng[1], stats)
-                        groups = [
-                            g
-                            for g in range(md.num_row_groups)
-                            if stats is None
-                            or (stats[g][0] <= hi and stats[g][1] >= lo)
-                        ]
-                        tbl = pf.read_row_groups(groups)
-                        # trim Arrow-side BEFORE the Python conversion:
-                        # a row group holds up to ~10^6 rows and
-                        # to_pylist of the untrimmed group would dwarf
-                        # the read itself
-                        import pyarrow.compute as pc
-
-                        col = tbl.column("version")
-                        tbl = tbl.filter(
-                            pc.and_(
-                                pc.greater_equal(col, lo),
-                                pc.less_equal(col, hi),
-                            )
-                        )
-                    else:
-                        # small or fully-covered fragment: plain footer+
-                        # column read is ~4x cheaper than the dataset path
-                        tbl = pf.read()
-                    rows = list(zip(*[
-                        tbl.column(c).to_pylist()
-                        for c in (
-                            "version", "version_prev", "timestamp",
-                            "label", "payload", "checksum",
-                        )
-                    ]))
-                    if n_rows <= 1024 and n_rows == len(rows):
+                    if md.num_rows <= 1024:
                         # hot-tail cache: single-append fragments are
                         # immutable and tiny — repeated pages over an
                         # uncompacted tail must not re-open 1000 files
+                        rows = _table_rows(pf.read())
                         with self._lock:
                             if key not in self._frag_row_cache:
-                                self._frag_rows_total += n_rows
+                                self._frag_rows_total += len(rows)
                                 self._frag_row_cache[key] = rows
                             while (
                                 self._frag_rows_total > 200_000
@@ -2341,11 +2362,36 @@ class EventLog:
                             ):
                                 _, old = self._frag_row_cache.popitem(last=False)
                                 self._frag_rows_total -= len(old)
-                out.extend(
-                    r
-                    for r in rows
-                    if lo <= r[0] <= hi and (label is None or r[3] == label)
+                if rows is not None:
+                    out.extend(
+                        r
+                        for r in rows
+                        if lo <= r[0] <= hi and (label is None or r[3] == label)
+                    )
+                    continue
+                # every other fragment: row groups are the read unit.
+                # Only groups whose version stats overlap the page are
+                # decoded, in page order, and rows are filtered
+                # Arrow-side before the Python conversion. A file
+                # without per-group stats counts each group as the
+                # whole file range: no pruning, still exact.
+                stats = rng[2]
+                if stats is None:
+                    stats = _version_group_stats(md) or [rng[:2]] * md.num_row_groups
+                    remember(key, (rng[0], rng[1], stats))
+                groups = sorted(
+                    (g for g, (glo, ghi) in enumerate(stats) if glo <= hi and ghi >= lo),
+                    key=(lambda g: -stats[g][1]) if reverse else (lambda g: stats[g][0]),
                 )
+                for g in groups:
+                    if page_full_before(*stats[g]):
+                        break
+                    tbl = pf.read_row_groups([g])
+                    ver = tbl.column("version")
+                    keep = pc.and_(pc.greater_equal(ver, lo), pc.less_equal(ver, hi))
+                    if label is not None:
+                        keep = pc.and_(keep, pc.equal(tbl.column("label"), label))
+                    out.extend(_table_rows(tbl.filter(keep)))
         except (FileNotFoundError, OSError, ValueError):
             return None  # manifest/fragment race: Spark path re-snapshots
         return out
@@ -2540,9 +2586,9 @@ class EventLog:
             n = target_partitions or max(1, self.spark.sparkContext.defaultParallelism // 4)
             tmp = self.path + f".compact.{uuid.uuid4().hex}"
             # 8 MiB row groups (vs the 128 MiB default): row groups are
-            # the pruning unit of the scan_rows page path — a page read
-            # inside a compacted fragment costs one row group, and at
-            # the default size that is ~10^6 rows for a 1000-row page
+            # the read unit of the scan_rows page path — a page inside a
+            # compacted fragment decodes the groups overlapping it, and
+            # at the default size one group is ~10^6 rows
             if cluster_by not in (None, "label"):
                 raise ValueError(f"unknown cluster_by {cluster_by!r}")
             cols = ["label", "version"] if cluster_by == "label" else ["version"]
@@ -2695,10 +2741,14 @@ class EventLog:
             manifest = self._manifest_files()
             # fold set: the single-commit fragments AND any still-small
             # previous fold outputs (size-tiered: a minor file absorbs
-            # folds until it reaches MAX_BYTES, then is left for major
-            # compact) — so per-fold work is bounded by MAX_BYTES and
-            # the steady-state file count is total_bytes/MAX_BYTES, not
-            # linear in fold count
+            # folds until it exceeds MAX_BYTES, then is left for major
+            # compact) — so the steady-state file count is about
+            # total_bytes/MAX_BYTES, not linear in fold count.
+            # MAX_BYTES bounds each INPUT, not their sum: one fold reads
+            # every small fragment (~the trigger count of commits plus
+            # at most one still-small fold output), so its work and its
+            # output are bounded by (#inputs) x MAX_BYTES — 256
+            # 1000-event commits fold into one ~14 MB file
             small = [
                 f
                 for f in manifest
@@ -2719,7 +2769,7 @@ class EventLog:
             ).sort_by("version")
             name = f"compact-{uuid.uuid4().hex[:8]}-minor.parquet"
             landing = os.path.join(self.path, "." + name + ".tmp")
-            pq.write_table(merged, landing)
+            pq.write_table(merged, landing, row_group_size=FOLD_ROW_GROUP_ROWS)
             os.rename(landing, os.path.join(self.path, name))
             # merged is sorted by version: range = first/last row; the
             # fold holds the rows driver-side, so label stats are exact

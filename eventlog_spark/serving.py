@@ -218,12 +218,16 @@ class _Handler(BaseHTTPRequestHandler):
             self._err("ErrBadArgument")
             return
         parts = []
+        times: dict[int, str] = {}  # a page's events share a few seconds
         for e in rows:
+            t = times.get(e.timestamp)
+            if t is None:
+                t = times[e.timestamp] = _rfc3339(e.timestamp)
             parts.append(
                 '{"time":"%s","version":"%s","version-previous":"%s",'
                 '"version-next":"%s","label":"%s","payload":%s}'
                 % (
-                    _rfc3339(e.timestamp),
+                    t,
                     format(e.version, "x"),
                     format(e.version_prev, "x"),
                     format(e.version_next, "x"),

@@ -939,6 +939,153 @@ def test_scan_rows_label_page_stops_early(tmp_path):
     assert [r.version for r in rows] == list(range(45, 50))
 
 
+def _fold_log(spark, path: str, n: int, label_of) -> EventLog:
+    """A log whose first ``n`` events (1000-event append_multi batches)
+    are minor-folded into one file, plus a short single-append tail."""
+    log = EventLog.create(spark, path)
+    log.MINOR_COMPACT_FRAGMENTS = 0
+    for b in range(0, n, 1000):
+        log.append_multi(
+            [(label_of(v), json.dumps({"v": v})) for v in range(b + 1, min(b + 1000, n) + 1)]
+        )
+    assert log.minor_compact() == -(-n // 1000)
+    for v in range(n + 1, n + 6):
+        log.append(label_of(v), json.dumps({"v": v}))
+    return log
+
+
+def _fold_file(log) -> str:
+    (name,) = [f for f in log._manifest_files() if f.endswith("-minor.parquet")]
+    return os.path.join(log.path, name)
+
+
+def _count_row_group_reads(monkeypatch) -> list[int]:
+    """Record every row group decoded through ParquetFile.read_row_groups;
+    a whole-file ParquetFile.read of a fold (>1024 rows) is recorded as -1."""
+    import pyarrow.parquet as pq
+
+    seen: list[int] = []
+    real_groups, real_read = pq.ParquetFile.read_row_groups, pq.ParquetFile.read
+
+    def read_row_groups(self, row_groups, *a, **k):
+        seen.extend(row_groups)
+        return real_groups(self, row_groups, *a, **k)
+
+    def read(self, *a, **k):
+        if self.metadata.num_rows > 1024:
+            seen.append(-1)
+        return real_read(self, *a, **k)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", read_row_groups)
+    monkeypatch.setattr(pq.ParquetFile, "read", read)
+    return seen
+
+
+def test_minor_fold_writes_page_sized_row_groups(tmp_path):
+    """A minor fold of more than FOLD_ROW_GROUP_ROWS rows writes row
+    groups of at most that size — the read unit of a page."""
+    import pyarrow.parquet as pq
+
+    from eventlog_spark.log import FOLD_ROW_GROUP_ROWS
+
+    n = 10_000
+    assert n > 2 * FOLD_ROW_GROUP_ROWS
+    log = _fold_log(None, str(tmp_path / "rg"), n, lambda v: "x")
+    md = pq.ParquetFile(_fold_file(log)).metadata
+    sizes = [md.row_group(g).num_rows for g in range(md.num_row_groups)]
+    assert sum(sizes) == n
+    assert len(sizes) == -(-n // FOLD_ROW_GROUP_ROWS)
+    assert max(sizes) <= FOLD_ROW_GROUP_ROWS
+
+
+def test_scan_rows_row_group_pages_match_scan_dataframe(spark, tmp_path, monkeypatch):
+    """scan_rows over a multi-row-group fold — and over a legacy fold
+    written as ONE row group by plain pq.write_table — equals the Spark
+    scan on forward, reverse, skip_first and label pages that start on,
+    end on and straddle row-group boundaries, and a 1000-row page
+    decodes at most 2 row groups of the fold."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from eventlog_spark.log import FOLD_ROW_GROUP_ROWS as G
+
+    n = 10_000
+    assert n > 2 * G + 1000
+
+    def label_of(v):
+        return ["red", "blue", "green"][v % 3]
+
+    folded = _fold_log(spark, str(tmp_path / "rgs"), n, label_of)
+    legacy_path = str(tmp_path / "legacy")
+    shutil.copytree(folded.path, legacy_path)
+    legacy = EventLog.open(spark, legacy_path)
+    fold = _fold_file(legacy)
+    pq.write_table(pq.read_table(fold), fold)
+    assert pq.ParquetFile(fold).metadata.num_row_groups == 1
+    assert pq.ParquetFile(_fold_file(folded)).metadata.num_row_groups > 2
+
+    cases = [
+        dict(version=1, limit=1000),
+        dict(version=G + 1, limit=1000),  # starts on a boundary
+        dict(version=G - 999, limit=1000),  # ends on a boundary
+        dict(version=G - 400, limit=1000),  # straddles
+        dict(version=2 * G + 1, limit=1000),
+        dict(version=G, reverse=True, limit=1000),  # starts on a group's end
+        dict(version=G + 500, reverse=True, limit=1000),  # straddles
+        dict(version=G, skip_first=True, limit=1000),
+        dict(version=G + 1, reverse=True, skip_first=True, limit=1000),
+        dict(reverse=True, limit=1000),  # fold + hot tail
+        dict(version=n - 500, limit=1000),
+        dict(label="red", limit=1000),
+        dict(label="blue", version=G - 1500, limit=1000),
+        dict(label="green", reverse=True, limit=1000),
+        dict(label="red", version=2 * G + 100, reverse=True, limit=700),
+        dict(label="blue", version=G, skip_first=True, limit=5),
+    ]
+    for log in (folded, legacy):
+        for kw in cases:
+            fast = log.scan_rows(**kw)
+            slow = log.scan(**kw).collect()
+            assert fast and [tuple(r) for r in fast] == [tuple(r) for r in slow], kw
+
+    seen = _count_row_group_reads(monkeypatch)
+    for kw, groups in [
+        (dict(version=G - 400, limit=1000), [0, 1]),
+        (dict(version=G + 1, limit=1000), [1]),
+        (dict(version=G + 500, reverse=True, limit=1000), [1, 0]),
+    ]:
+        seen.clear()
+        folded._frag_range_cache.clear()
+        assert len(folded.scan_rows(**kw)) == 1000
+        assert seen == groups, kw
+
+
+def test_scan_rows_label_page_stops_at_row_groups(tmp_path, monkeypatch):
+    """A bounded label page inside one big fold stops at row-group
+    granularity: groups are read in page order and the read ends once
+    the page is provably full. Probe: every decoded group (and any
+    whole-file read) is recorded and must be exactly the page's groups,
+    and there is no Spark session to fall back to."""
+    from eventlog_spark.log import FOLD_ROW_GROUP_ROWS as G
+
+    n = 5 * G
+    log = _fold_log(None, str(tmp_path / "es"), n, lambda v: "hot" if v % 4 == 0 else "cold")
+    seen = _count_row_group_reads(monkeypatch)
+    # G/4 >= 1000 matches per group: one group fills a 1000-match page
+    assert G // 4 >= 1000
+    for kw, groups, first in [
+        (dict(label="hot", limit=1000), [0], 4),
+        (dict(label="hot", reverse=True, version=n, limit=1000), [4], n),
+        (dict(label="hot", version=G - 8, limit=1000), [0, 1], G - 8),
+    ]:
+        seen.clear()
+        rows = log.scan_rows(**kw)
+        assert len(rows) == 1000 and rows[0].version == first, kw
+        assert {r.label for r in rows} == {"hot"}
+        assert seen == groups, kw
+
+
 def test_scan_rows_label_matches_scan_dataframe(log):
     """The driver-side label page (scan_rows(label=...)) must agree with
     the Spark label scan on both engines across paging params — same
@@ -1174,6 +1321,70 @@ def test_bulk_crash_truncates_named_orphans_without_listing(
     r = fresh.append_dataframe(batch, order_cols=["id"])
     assert r is not None and r.version == 5  # versions were never burned
     assert [x.version for x in fresh.scan_rows()] == [1, 2, 3, 4, 5]
+
+
+def test_check_staged_ranges_requires_exact_tiling():
+    """The bulk commit's staged (lo, hi, rows) must tile base+1..
+    base+total: gaps between or inside files, overlaps, a short or long
+    batch and a stat-less file are all refused."""
+    from eventlog_spark.log import _check_staged_ranges
+
+    _check_staged_ranges([(6, 8, 3), (4, 5, 2)], 3, 5)
+    _check_staged_ranges([], 3, 0)
+    for ranges, total in [
+        ([(4, 5, 2), (7, 8, 2)], 5),  # gap between files
+        ([(4, 6, 2), (7, 8, 2)], 5),  # gap inside a file
+        ([(4, 6, 3), (6, 8, 3)], 5),  # overlap
+        ([(4, 8, 5)], 6),  # fewer versions than the count pass
+        ([(4, 8, 5)], 4),  # more
+        ([(5, 8, 4)], 5),  # does not start at base+1
+        ([(4, 8, 5), None], 5),  # no version stats
+    ]:
+        with pytest.raises(InvalidVersion):
+            _check_staged_ranges(ranges, 3, total)
+
+
+@pytest.mark.parametrize("order_cols", [None, ["id"]])
+def test_bulk_commit_with_version_gap_is_refused(spark, tmp_path, monkeypatch, order_cols):
+    """A bulk write whose frame skips a version (what a nondeterministic
+    upstream does when the count pass and the write see different rows)
+    is refused before any staged file becomes visible: the head, the
+    manifest and the directory are unchanged and the staging dir is
+    gone. Covers the persisted flow and the streamed ordered flow."""
+    import dataclasses
+
+    from pyspark.sql import functions as F
+
+    from eventlog_spark.functions import versioning
+
+    path = str(tmp_path / "gap")
+    log = EventLog.create(spark, path)
+    log.append("pre", '{"i":0}')
+    batch = spark.range(6).select(
+        F.lit("bulk").alias("label"),
+        F.format_string('{"i":%d}', F.col("id")).alias("payload"),
+        "id",
+    )
+    fn = "with_dense_versions_streamed" if order_cols else "with_dense_versions_counted"
+    real = getattr(versioning, fn)
+
+    def gappy(df, base, **kw):
+        b = real(df, base=base, **kw)
+        return dataclasses.replace(b, df=b.df.where(F.col("version") != base + 3))
+
+    files_before = sorted(os.listdir(path))
+    manifest_before = log._manifest_files()
+    monkeypatch.setattr(versioning, fn, gappy)
+    with pytest.raises(InvalidVersion):
+        log.append_dataframe(batch, order_cols=order_cols)
+    monkeypatch.undo()
+    assert log.version() == 1
+    assert log._manifest_files() == manifest_before
+    assert sorted(os.listdir(path)) == files_before
+    assert not [f for f in os.listdir(tmp_path) if ".bulk." in f]
+    r = log.append_dataframe(batch, order_cols=order_cols)
+    assert r.version == 7
+    assert [x.version for x in log.scan_rows()] == list(range(1, 8))
 
 
 def test_label_layout_report_bulk_and_empty_edges(spark, tmp_path, monkeypatch):

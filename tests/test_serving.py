@@ -305,6 +305,39 @@ def test_fanout_subscribers_converge_no_leak(tmp_path):
     assert len(os.listdir("/proc/self/fd")) <= fd0 + 8
 
 
+def test_page_times_cross_second_boundaries(server, monkeypatch):
+    """A page's "time" strings are formatted once per distinct second
+    (serving._scan); the body must stay byte-identical to formatting
+    every event, on pages whose events span several seconds with
+    several events in each."""
+    import time
+
+    from eventlog_spark.serving import _rfc3339
+
+    base, log = server
+    now = [1_700_000_000.25]
+    with monkeypatch.context() as m:
+        m.setattr(time, "time", lambda: now[0])
+        for step, n in [(0, 2), (1, 3), (0, 1), (2, 2), (0, 1)]:
+            now[0] += step
+            log.append_multi([("t", json.dumps({"s": step, "k": k})) for k in range(n)])
+    rows = log.scan_rows(version=1)
+    assert len({r.timestamp for r in rows}) == 3
+    expected = "[" + ",".join(
+        '{"time":"%s","version":"%x","version-previous":"%x",'
+        '"version-next":"%x","label":"%s","payload":%s}'
+        % (_rfc3339(r.timestamp), r.version, r.version_prev,
+           r.version_next, r.label, r.payload)
+        for r in rows
+    ) + "]"
+    status, body = _get(f"{base}/log/1")
+    assert status == 200 and body == expected
+    status, body = _get(f"{base}/log/9?reverse&n=6")
+    assert [d["time"] for d in json.loads(body)] == [
+        _rfc3339(r.timestamp) for r in log.scan_rows(version=9, reverse=True, limit=6)
+    ]
+
+
 def test_label_filtered_scan_http(server):
     """Label-filtered pages over HTTP (extension): the scan route's
     ``label`` query param serves only matching events through the
